@@ -123,10 +123,18 @@ def build_cells_table_map(
     the same contract: dense rank over the lexicographic order of the
     comma-joined sorted region-id strings, empty set pinned to 0.
 
-    ``input_batch_unique=True`` skips the distinct exchange for callers
-    whose input is already batch-deduplicated near dimension scale
-    (page_cell_keys_text); corpus-scale callers keep distinct-first so the
-    single-task gather never sees fact-table row counts."""
+    Contract: the single task receives the DISTINCT input keys (NULL
+    included) — at most (occupied cells + 1) rows however large the
+    corpus, because the default path runs ``distinct()`` before the
+    ``repartition(1)`` gather.  ``SpatialEngine.flagship_map`` and
+    ``run_flagship_staged`` pass the materialized fact pass's
+    ``cell_key`` column and rely on that bound.
+
+    ``input_batch_unique=True`` skips the distinct exchange; the gather
+    then sees every input row (batches × occupied cells for
+    page_cell_keys_text's batch-unique keys), so the bound above no longer
+    holds.  No engine path passes it any more — the flagship stopped
+    using it with page_cell_keys_text; it remains for key-only probes."""
     import numpy as np
 
     from libosmtools_spark.geom import kernels as K

@@ -292,9 +292,12 @@ def minhash_lsh_pairs(
     # join 2.76 → 1.47 s with an IDENTICAL candidate set (41,323 pairs;
     # earlier rounds measured the raw array<long> key slower than the
     # string cast — the hashed long beats both).  A cross-(band,key) hash
-    # collision can only ADD a candidate pair, and every candidate passes
-    # exact-Jaccard verification below, so the declared output is
-    # unchanged; collisions are ~2^-64 per bucket pair.
+    # collision can only ADD a candidate pair, and every candidate goes
+    # through exact-Jaccard verification below, so no false positive can
+    # reach the output.  The output is NOT guaranteed identical to the
+    # unhashed key's: a colliding pair whose exact Jaccard clears the
+    # threshold is a true positive the unhashed bands missed, and it is
+    # kept.  Collisions are ~2^-64 per bucket pair.
     # checkpointed ONCE: the aliased self-join below otherwise re-runs the
     # whole signature pipeline per side, and with both sides reading the
     # same materialized rows the two bucket exchanges canonicalize equal

@@ -1,21 +1,25 @@
-"""Zero-shuffle flagship: the broadcast-store map-side spatial join.
+"""The flagship kernel: the broadcast-store map-side spatial join.
 
 The reference's query path is a per-point lookup against an in-memory
 GridRegionTree (/root/reference/include/osmtools/OsmGridRegionTree.h:109-151)
 — no data movement at all.  When the polygon store + cell index broadcast
 (the normal case: the store is a dimension table), the Spark-faithful
-translation is a single ``mapInArrow`` pass:
+translation of the fact pass is a single ``mapInArrow``:
 
     pages → one text-in Arrow-batched map (RE2 geocode + cell keys +
     region resolution all inside the batch: definite hits free via
     searchsorted + mask OR, boundary candidates ray-cast) →
     (url, cell_key, region_ids)
 
-ZERO shuffles, embarrassingly parallel, scales linearly with executors —
-this is the plan that survives 10^12 rows.  The join-based path
-(joins/spatial.py) remains for stores too large to broadcast; the lat/lon
-variant ``map_spatial_join`` serves callers whose coordinates already
-exist as columns (streaming joins, cell centers).
+The pass itself moves no rows between tasks.  Its task count comes from
+the input's bytes (``coalesce_by_bytes``), not from the scan's split
+count: each Python task pays a fixed boundary cost, so a corpus that fits
+a few splits runs as few tasks.  ``SpatialEngine.flagship_map`` materializes this pass
+once and derives the cells dictionary from its distinct ``cell_key``s
+(pipeline.py).  The join-based path (joins/spatial.py) remains for stores
+too large to broadcast; the lat/lon variant ``map_spatial_join`` serves
+callers whose coordinates already exist as columns (streaming joins, cell
+centers).
 """
 
 from __future__ import annotations
@@ -292,6 +296,33 @@ def _keys_of(la: np.ndarray, lo: np.ndarray, level: int) -> np.ndarray:
     return keys
 
 
+def coalesce_by_bytes(df: DataFrame) -> DataFrame:
+    """``df`` coalesced (no shuffle) to ``max(defaultParallelism,
+    ceil(plan sizeInBytes / spark.sql.files.maxPartitionBytes))``
+    partitions when it has more than that — the task count of a Python
+    Arrow stage over it.
+
+    The scan's own split count is sized for JVM work (the session's scan
+    floor asks for several splits per core), but every ``mapInArrow`` task
+    pays a fixed Python-boundary cost: on a 4-core VM an identity Arrow
+    pass over 200k pages took 2.19 s as 32 tasks and 0.90 s as 4.
+    Coalescing merges whole splits without moving rows between them.
+    Inputs whose plan ends in a shuffle (adaptive plans) are returned as
+    they are: AQE already sizes those partitions, and counting them here
+    would run the shuffle."""
+    qe = df._jdf.queryExecution()
+    plan = qe.executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        return df
+    spark = df.sparkSession
+    size = int(str(qe.optimizedPlan().stats().sizeInBytes()))
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    target = max(spark.sparkContext.defaultParallelism, -(-size // split))
+    if plan.execute().getNumPartitions() > target:
+        return df.coalesce(target)
+    return df
+
+
 def map_spatial_join_text(
     pages: DataFrame,
     candidates_bcast,
@@ -300,9 +331,10 @@ def map_spatial_join_text(
     text_col: str = "text",
     level: int = 6,
 ) -> DataFrame:
-    """pages(id, text) → (id, cell_key, region_ids): the zero-shuffle
-    flagship kernel with geocode + cell-key derivation INSIDE the Arrow
-    batch (RE2 + numpy) instead of JVM expressions upstream.
+    """pages(id, text) → (id, cell_key, region_ids): the flagship's fact
+    pass, with geocode + cell-key derivation INSIDE the Arrow batch (RE2 +
+    numpy) instead of JVM expressions upstream, over
+    ``coalesce_by_bytes(pages)``.
 
     Same results as ``with_cell_key(geocode_pages(pages))`` →
     ``map_spatial_join`` (see _geocode_batch for the parity argument); the
@@ -339,7 +371,7 @@ def map_spatial_join_text(
                 [id_col, "cell_key", "region_ids"],
             )
 
-    out = pages.select(id_col, text_col).mapInArrow(run, schema)
+    out = coalesce_by_bytes(pages.select(id_col, text_col)).mapInArrow(run, schema)
     restore_key = F.when(F.col("cell_key") >= 0, F.col("cell_key"))
     return out.select(id_col, restore_key.alias("cell_key"), "region_ids")
 
@@ -349,10 +381,14 @@ def page_cell_keys_text(
 ) -> DataFrame:
     """pages(…, text) → distinct-ish (cell_key) rows (NULL for pages with
     no geocode), one text-only Arrow pass emitting each batch's UNIQUE
-    keys — the cells-dictionary feed of the flagship without re-running
-    the geocode as a second JVM pass over the corpus.  Callers still
-    .distinct() the (tiny) result; the batch-level np.unique just keeps
-    the emitted rows at distinct-cell scale instead of corpus scale."""
+    keys.  Callers still .distinct() the result: the batch-level np.unique
+    bounds the rows per batch, not the rows overall (batches × occupied
+    cells).
+
+    The flagship no longer calls this: ``SpatialEngine.flagship_map``
+    takes its dictionary keys from the materialized fact pass instead of
+    geocoding the corpus a second time.  It stays as the key-only probe of
+    the geocode + cell-key layers."""
     schema = "cell_key long"
 
     def run(batches):
@@ -363,7 +399,7 @@ def page_cell_keys_text(
             keys = np.unique(_keys_of(la, lo, level))
             yield pa.RecordBatch.from_arrays([pa.array(keys, type=pa.int64())], ["cell_key"])
 
-    out = pages.select(text_col).mapInArrow(run, schema)
+    out = coalesce_by_bytes(pages.select(text_col)).mapInArrow(run, schema)
     return out.select(F.when(F.col("cell_key") >= 0, F.col("cell_key")).alias("cell_key"))
 
 

@@ -18,6 +18,7 @@ from libosmtools_spark.cells.assign import (
     build_cells_table_map,
 )
 from libosmtools_spark.index.grid import build_adaptive_cell_index, rings_lookup
+from libosmtools_spark.joins.mapjoin import map_spatial_join_text
 from libosmtools_spark.joins.spatial import (
     geocode_pages,
     page_region_sets,
@@ -118,38 +119,43 @@ class SpatialEngine:
         return assign_point_cell_ids(pts, cells).select("url", "cell_key", "cell_id")
 
     def flagship_map(self, pages: DataFrame) -> DataFrame:
-        """(url, cell_key, cell_id, region_ids) with ZERO shuffles — the
-        broadcast-store plan (joins/mapjoin.py): one text-in mapInArrow
-        resolves each page's geocode, cell key AND region set (RE2 + numpy
-        inside the batch — the JVM regex/key pass and 24 B/row of Arrow
-        boundary traffic are gone, see map_spatial_join_text); the cells
-        dictionary derives from a text-only second pass that emits
-        batch-unique keys, and joins broadcast.  The plan of record for
-        10^12 pages with a broadcastable polygon store (the reference's
-        own in-memory posture)."""
-        from libosmtools_spark.joins.mapjoin import (
-            map_spatial_join_text,
-            page_cell_keys_text,
+        """(url, cell_key, cell_id, region_ids) from ONE fact pass — the
+        broadcast-store plan (joins/mapjoin.py).  The text-in kernel
+        geocodes, keys and resolves every page once, and its output is
+        materialized eagerly (``localCheckpoint``) because it is read
+        twice: its distinct cell keys feed the cells dictionary, and it is
+        joined to that dictionary by broadcast.  The returned frame reads
+        the materialized pass; its blocks are reclaimed when the frame is
+        garbage-collected (a ``.cache()`` would pin them until an explicit
+        unpersist).  ``run_flagship_staged`` is the same plan with every
+        stage kept as parquet instead."""
+
+        def keep(name, build):
+            df = build()
+            return df.localCheckpoint(eager=True) if name == "page_regions" else df
+
+        return self._flagship_stages(
+            lambda: map_spatial_join_text(
+                pages, self.candidates_bcast, self.rings_bcast, level=self.level
+            ),
+            keep,
         )
 
-        res = map_spatial_join_text(
-            pages, self.candidates_bcast, self.rings_bcast, level=self.level
+    def _flagship_stages(self, fact, keep) -> DataFrame:
+        """The flagship's three stages, each built lazily and kept by
+        ``keep(name, build)``: ``page_regions`` (the fact pass ``fact()``),
+        ``cells`` (the dictionary over its distinct cell keys — the
+        reference likewise builds cellIdToCellList from the arrangement it
+        already resolved, OsmTriangulationRegionStore.cpp:946-1086) and
+        ``flagship`` (their broadcast join)."""
+        res = keep("page_regions", fact)
+        cells = keep(
+            "cells",
+            lambda: build_cells_table_map(
+                res.select("cell_key"), self.candidates_bcast, self.rings_bcast
+            ),
         )
-        cells = build_cells_table_map(
-            page_cell_keys_text(pages, level=self.level),
-            self.candidates_bcast,
-            self.rings_bcast,
-            # batch-unique keys already — the fused build's single task
-            # dedups globally, no distinct exchange needed
-            input_batch_unique=True,
-        )
-        out = res.join(F.broadcast(cells.select("cell_key", "cell_id")), "cell_key", "left")
-        return out.select(
-            "url",
-            "cell_key",
-            F.coalesce("cell_id", F.lit(0)).alias("cell_id"),
-            "region_ids",
-        )
+        return keep("flagship", lambda: _with_cell_ids(res, cells))
 
     def flagship(self, pages: DataFrame) -> DataFrame:
         """(url, cell_key, cell_id, region_ids) — ONE wide pass:
@@ -172,13 +178,19 @@ class SpatialEngine:
         cells = build_cells_table_map(
             pts.select("cell_key"), self.candidates_bcast, self.rings_bcast
         )
-        out = agg.join(F.broadcast(cells.select("cell_key", "cell_id")), "cell_key", "left")
-        return out.select(
-            "url",
-            "cell_key",
-            F.coalesce("cell_id", F.lit(0)).alias("cell_id"),
-            "region_ids",
-        )
+        return _with_cell_ids(agg, cells)
+
+
+def _with_cell_ids(res: DataFrame, cells: DataFrame) -> DataFrame:
+    """(url, cell_key, region_ids) + the dictionary's cell_id (0 for a
+    cell_key the dictionary lacks, i.e. a page without a geocode)."""
+    out = res.join(F.broadcast(cells.select("cell_key", "cell_id")), "cell_key", "left")
+    return out.select(
+        "url",
+        "cell_key",
+        F.coalesce("cell_id", F.lit(0)).alias("cell_id"),
+        "region_ids",
+    )
 
 
 def pages_from_html(pages: DataFrame) -> DataFrame:
@@ -207,23 +219,13 @@ def run_flagship_staged(
     level: int = DEFAULT_LEVEL,
     max_level: int | None = None,
 ) -> DataFrame:
-    """The production shape of the flagship: staged, resumable, and ONE
-    scan of the fact table.
-
-    - stage ``page_regions``: the zero-shuffle map join, written to
-      parquet (this IS the expensive fact pass — geocode + kernel);
-    - stage ``cells``: the dictionary built from the STAGE OUTPUT's
-      distinct cells (read back from the narrow stage-1 parquet — the
-      in-memory flagship_map re-derives them with a second pages scan,
-      which at 10^12 rows is a full extra fact pass);
-    - stage ``flagship``: broadcast join of the two.
-
-    Each stage records manifest lineage + per-partition metrics
-    (run/checkpoint.py); re-running with an unchanged input fingerprint
-    skips straight to reading the stage parquet — resumable from any
-    point (north-rule requirement)."""
-    from libosmtools_spark.cells.assign import build_cells_table_map
-    from libosmtools_spark.joins.mapjoin import map_spatial_join_text
+    """``SpatialEngine.flagship_map``'s plan with every stage
+    (``page_regions``, ``cells``, ``flagship``) written to parquet by
+    ``CheckpointManager.stage``: staged, resumable, and ONE scan of the
+    fact table.  Each stage records manifest lineage + per-partition
+    metrics (run/checkpoint.py); re-running with an unchanged input
+    fingerprint skips straight to reading the stage parquet — resumable
+    from any point (north-rule requirement)."""
     from libosmtools_spark.run.checkpoint import CheckpointManager, input_fingerprint
 
     pages_path = os.path.join(fixtures_dir, "pages.parquet")
@@ -231,30 +233,9 @@ def run_flagship_staged(
     rings = spark.read.parquet(os.path.join(fixtures_dir, "region_rings.parquet"))
     eng = SpatialEngine(spark, rings, level, max_level)
     cp = CheckpointManager(spark, ckpt_root)
-
-    def build_regions():
-        pages = spark.read.parquet(pages_path)
-        return map_spatial_join_text(
-            pages, eng.candidates_bcast, eng.rings_bcast, level=eng.level
-        )
-
-    res = cp.stage("page_regions", fp, build_regions)
-    cells = cp.stage(
-        "cells",
-        fp,
-        lambda: build_cells_table_map(
-            res.select("cell_key"), eng.candidates_bcast, eng.rings_bcast
+    return eng._flagship_stages(
+        lambda: map_spatial_join_text(
+            spark.read.parquet(pages_path), eng.candidates_bcast, eng.rings_bcast, level=eng.level
         ),
+        lambda name, build: cp.stage(name, fp, build),
     )
-    final = cp.stage(
-        "flagship",
-        fp,
-        lambda: res.join(F.broadcast(cells.select("cell_key", "cell_id")), "cell_key", "left")
-        .select(
-            "url",
-            "cell_key",
-            F.coalesce("cell_id", F.lit(0)).alias("cell_id"),
-            "region_ids",
-        ),
-    )
-    return final

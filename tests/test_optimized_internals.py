@@ -192,6 +192,50 @@ class TestTextKernelParity:
         ).count() == 0
 
 
+class TestCellInterningParity:
+    def test_fused_build_equals_jvm_interning(self, spark):
+        """build_cells_table_map's in-task interning == build_cells_table's
+        JVM intern_cell_ids, on cell_key, cell_id and region_ids — over a
+        store with twelve multi-region sets, so the lexicographic set order
+        ("1,10" < "1,2") differs from the numeric one."""
+        from libosmtools_spark.cells.assign import build_cells_table, build_cells_table_map
+        from libosmtools_spark.geom import kernels as K
+        from libosmtools_spark.pipeline import SpatialEngine
+
+        rects = {0: (-30.0, -30.0, -10.0, -10.0), 1: (0.0, 0.0, 60.0, 60.0)}
+        for j in range(12):  # regions 2..13, disjoint, each inside region 1
+            lat0, lon0 = 5.0 + 15.0 * (j // 4), 5.0 + 15.0 * (j % 4)
+            rects[j + 2] = (lat0, lon0, lat0 + 8.0, lon0 + 8.0)
+        rings = spark.createDataFrame(
+            [
+                (rid, 0, "outer", [{"lat": float(a), "lon": float(o)} for a, o in K.rect_ring(*r)])
+                for rid, r in rects.items()
+            ],
+            "region_id int, ring_id int, ring_role string, "
+            "points array<struct<lat:double,lon:double>>",
+        )
+        eng = SpatialEngine(spark, rings)
+        lat, lon = (g.ravel() for g in np.meshgrid(np.arange(-35.0, 66.0), np.arange(-35.0, 66.0)))
+        keys = [int(k) for k in np.unique(K.cell_key(lat, lon, eng.level))] + [None]
+        point_cells = spark.createDataFrame([(k,) for k in keys], "cell_key long")
+
+        def rows(df):
+            return sorted(
+                ((r["cell_key"], r["cell_id"], tuple(r["region_ids"])) for r in df.collect()),
+                key=lambda t: (t[0] is None, t[0] or 0),
+            )
+
+        fused = rows(build_cells_table_map(point_cells, eng.candidates_bcast, eng.rings_bcast))
+        jvm = rows(
+            build_cells_table(point_cells, eng.cell_index, eng.rings_bcast, eng.level, eng.max_level)
+        )
+        assert fused == jvm
+        ids = {sets: cid for _, cid, sets in fused}
+        assert sum(len(sets) > 1 for sets in ids) >= 12
+        assert ids[()] == 0
+        assert ids[(1, 10)] < ids[(1, 2)]
+
+
 class TestSimhashVoteParity:
     """The branch-free fingerprint vote (2·ones > n) must be bit-equal to
     the conditional-sum form Σ(bit ? +1 : −1) > 0 it replaced — including

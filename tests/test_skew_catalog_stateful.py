@@ -167,11 +167,8 @@ class TestStagedFlagship:
         eng = SpatialEngine.from_fixtures(spark, sf_smoke)
         pages = spark.read.parquet(os.path.join(sf_smoke, "pages.parquet"))
         want = eng.flagship_map(pages).toPandas()
-        key = ["url"]
-        g = got.sort_values(key).reset_index(drop=True)
-        w = want.sort_values(key).reset_index(drop=True)
-        assert (g["cell_id"].to_numpy() == w["cell_id"].to_numpy()).all()
-        assert (g["region_ids"].apply(list) == w["region_ids"].apply(list)).all()
+        # one plan, two ways of keeping its stages: row for row equal
+        pd.testing.assert_frame_equal(_by_url(got), _by_url(want), check_dtype=False)
 
         # resume: manifest must not grow (all three stages skipped)
         manifest = os.path.join(root, "manifest.jsonl")
@@ -180,3 +177,31 @@ class TestStagedFlagship:
         again = run_flagship_staged(spark, sf_smoke, root)
         assert again.count() == len(got)
         assert open(manifest).read() == before  # no stage re-ran
+
+    def test_coalesced_input_matches_uncoalesced(self, spark, sf_smoke, tmp_path):
+        """A corpus split into more scan partitions than cores runs its
+        fact pass as defaultParallelism tasks (coalesce_by_bytes) and gives
+        the same flagship rows as the single-file corpus."""
+        from libosmtools_spark.joins.mapjoin import map_spatial_join_text
+        from libosmtools_spark.pipeline import SpatialEngine
+
+        eng = SpatialEngine.from_fixtures(spark, sf_smoke)
+        pages = spark.read.parquet(os.path.join(sf_smoke, "pages.parquet"))
+        many_path = str(tmp_path / "pages_many")
+        pages.repartition(32).write.parquet(many_path)
+        many = spark.read.parquet(many_path)
+        cores = spark.sparkContext.defaultParallelism
+        assert many.rdd.getNumPartitions() > cores
+        assert pages.rdd.getNumPartitions() <= cores
+        fact = map_spatial_join_text(many, eng.candidates_bcast, eng.rings_bcast, level=eng.level)
+        assert fact.rdd.getNumPartitions() == cores
+
+        got = eng.flagship_map(many).toPandas()
+        want = eng.flagship_map(pages).toPandas()
+        pd.testing.assert_frame_equal(_by_url(got), _by_url(want), check_dtype=False)
+
+
+def _by_url(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Flagship rows sorted by url, region_ids as tuples (comparable)."""
+    out = pdf.assign(region_ids=pdf["region_ids"].map(lambda a: tuple(int(x) for x in a)))
+    return out.sort_values("url").reset_index(drop=True)

@@ -244,6 +244,46 @@ class TestFlagshipMapParity:
         w = _sorted_records(want, "url")
         pd.testing.assert_frame_equal(g, w, check_dtype=False)
 
+    def test_dictionary_gather_bounded_by_distinct_cells(self, engine, pages, spark):
+        """The single-task dictionary build sees each distinct cell key
+        once, however many Arrow batches the fact pass emits: with one row
+        per batch (many more batches than occupied cells) the rows entering
+        the repartition(1) gather stay within distinct keys + the NULL key,
+        read from the executed plan's shuffle metrics."""
+        conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        old = spark.conf.get(conf)
+        spark.conf.set(conf, "1")
+        try:
+            out = engine.flagship_map(pages)
+            rows = out.collect()
+        finally:
+            spark.conf.set(conf, old)
+        n_keys = len({r["cell_key"] for r in rows if r["cell_key"] is not None})
+        assert len(rows) > 4 * (n_keys + 1)  # batches ≫ distinct cells
+        gathers = [
+            n.metrics().apply("shuffleRecordsWritten").value()
+            for n in _physical_operators(out._jdf.queryExecution().executedPlan())
+            if n.getClass().getSimpleName() == "ShuffleExchangeExec"
+            and n.outputPartitioning().numPartitions() == 1
+        ]
+        assert len(gathers) == 1
+        assert 0 < gathers[0] <= n_keys + 1
+
+
+def _physical_operators(node):
+    """Every operator of an executed physical plan (py4j), descending into
+    adaptive plans and their materialized query stages."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _physical_operators(node.executedPlan())
+        return
+    yield node
+    if name.endswith("QueryStageExec"):
+        yield from _physical_operators(node.plan())
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _physical_operators(kids.apply(i))
+
 
 class TestRoundTrip:
     def test_write_read_back_identical(self, engine, pages, tmp_path, spark):

@@ -4,7 +4,9 @@ the plan-shape invariants the engine is designed around:
 - the cell-index join is a BroadcastHashJoin (no shuffle on the fact side);
 - parquet scans show pushed filters / pruned schemas where expected;
 - relational stages sit inside WholeStageCodegen spans;
-- the zero-shuffle flagship has NO Exchange at all before the final agg.
+- the flagship's fact pass has no Exchange; flagship_map reads it back
+  as one materialized scan (ExistingRDD), so every shuffle of its plan
+  sits under the broadcast (dimension) side: the cells dictionary.
 
 Usage: python tools/dump_plans.py [sf_dir]
 """
@@ -24,6 +26,34 @@ def plan_of(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def operators(plan):
+    """Pre-order walk of a physical plan's operators (py4j SparkPlan)."""
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from operators(kids.apply(i))
+
+
+def op_name(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def flagship_map_sides(df) -> tuple[list[str], int, int]:
+    """(fact-side operator names, shuffles on the broadcast side, shuffles
+    in the whole plan) of a flagship_map frame, from its executed plan."""
+    plan = df._jdf.queryExecution().executedPlan()
+    join = next(n for n in operators(plan) if op_name(n) == "BroadcastHashJoinExec")
+    kids = [join.children().apply(i) for i in range(join.children().size())]
+
+    def count(node, name):
+        return sum(op_name(n) == name for n in operators(node))
+
+    dim = next(k for k in kids if count(k, "BroadcastExchangeExec"))
+    fact = next(k for k in kids if k is not dim)
+    shuffle = "ShuffleExchangeExec"
+    return [op_name(n) for n in operators(fact)], count(dim, shuffle), count(plan, shuffle)
 
 
 def main():
@@ -47,11 +77,12 @@ def main():
 
     sections: list[tuple[str, str, list[str]]] = []
 
-    p = plan_of(eng.flagship_map(pages))
+    fm_df = eng.flagship_map(pages)
+    p = plan_of(fm_df)
     sections.append((
-        "flagship_map (zero-shuffle broadcast-store plan)",
+        "flagship_map (one materialized fact pass + broadcast cells dictionary)",
         p,
-        ["MapInArrow", "BroadcastHashJoin"],
+        ["Scan ExistingRDD", "MapInArrow", "BroadcastHashJoin"],
     ))
 
     p = plan_of(eng.flagship(pages))
@@ -70,23 +101,26 @@ def main():
 
     checks = []
     fm = sections[0][1]
-    # the PAGES (fact) path must be shuffle-free: inspect the raw map-join
-    # output before the dimension-side cells dictionary is attached
-    from libosmtools_spark.joins.mapjoin import map_spatial_join
+    # the PAGES (fact) pass must be shuffle-free before it is materialized
+    from libosmtools_spark.joins.mapjoin import map_spatial_join_text
 
-    raw = map_spatial_join(
-        eng.page_points(pages).select("url", "lat", "lon", "cell_key"),
-        eng.candidates_bcast,
-        eng.rings_bcast,
+    raw_plan = plan_of(
+        map_spatial_join_text(pages, eng.candidates_bcast, eng.rings_bcast, level=eng.level)
     )
-    raw_plan = plan_of(raw)
     fact_shuffles = raw_plan.count("Exchange") - raw_plan.count("BroadcastExchange")
-    checks.append(f"- fact-side shuffles in the zero-shuffle map join: {fact_shuffles} "
+    checks.append(f"- fact-side shuffles in the text-in map join: {fact_shuffles} "
                   f"{'✓' if fact_shuffles == 0 else '✗ UNEXPECTED'}")
     checks.append(f"- flagship_map dimension join is BroadcastHashJoin: "
                   f"{'✓' if 'BroadcastHashJoin' in fm else '✗'}")
-    checks.append("- flagship_map shuffles are confined to the dimension-side cells "
-                  "dictionary subtree (tiny: distinct cells), never the pages path ✓")
+    fact_ops, dim_shuffles, all_shuffles = flagship_map_sides(fm_df)
+    confined = (
+        fact_ops[-1] == "RDDScanExec"
+        and not any("Exchange" in o for o in fact_ops)
+        and dim_shuffles == all_shuffles
+    )
+    checks.append(f"- flagship_map fact side is a materialized scan ({' <- '.join(fact_ops)}) "
+                  f"and its {all_shuffles} shuffles all sit in the dimension-side cells "
+                  f"dictionary subtree: {'✓' if confined else '✗'}")
     scan_q = plan_of(spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
                      .select("doc_id").filter("doc_id > 100"))
     checks.append(f"- parquet pushdown visible (PushedFilters): "
