@@ -77,28 +77,6 @@ def build_cells_table(
     )
 
 
-def cell_region_sets_map(point_cells: DataFrame, candidates_bcast, rings_bcast) -> DataFrame:
-    """cell_region_sets via the broadcast-store kernel: ONE mapInArrow pass
-    resolves every distinct cell center's region set (identical semantics
-    to the join+PIP plan — same kernel as the zero-shuffle flagship), in
-    place of the explode-join/filter/groupBy/left-join stage pipeline whose
-    fixed overhead dominated at dimension scale."""
-    from libosmtools_spark.joins.mapjoin import map_spatial_join
-
-    clat, clon = cell_center_cols(F.col("cell_key"))
-    centers = (
-        point_cells.select("cell_key").distinct()
-        .select(
-            F.col("cell_key").alias("ck_id"),
-            clat.alias("lat"),
-            clon.alias("lon"),
-            "cell_key",
-        )
-    )
-    res = map_spatial_join(centers, candidates_bcast, rings_bcast, id_col="ck_id")
-    return res.select(F.col("ck_id").alias("cell_key"), "region_ids")
-
-
 def build_cells_table_map(
     point_cells: DataFrame,
     candidates_bcast,
@@ -119,7 +97,7 @@ def build_cells_table_map(
     1.64 s vs 0.82 s for the 200k-page kernel pass).  Now ONE Arrow task
     on the repartition(1)-gathered distinct keys computes centers (the
     exact cell_center_cols arithmetic, same IEEE op order), resolves
-    region sets with the same `_resolve_masks` kernel, and interns ids by
+    region sets with the same `resolve_masks` kernel, and interns ids by
     the same contract: dense rank over the lexicographic order of the
     comma-joined sorted region-id strings, empty set pinned to 0.
 
@@ -138,11 +116,7 @@ def build_cells_table_map(
     import numpy as np
 
     from libosmtools_spark.geom import kernels as K
-    from libosmtools_spark.joins.mapjoin import _masks_to_region_lists, _resolve_masks
-
-    n_regions = candidates_bcast.value["n_regions"]
-    n_words = max(1, (n_regions + 62) // 63)
-    index_levels = sorted(candidates_bcast.value["levels"].keys())
+    from libosmtools_spark.joins.mapjoin import _masks_to_region_lists, resolve_masks
 
     keys_df = point_cells.select("cell_key")
     if not input_batch_unique:
@@ -152,8 +126,6 @@ def build_cells_table_map(
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        tabs = candidates_bcast.value["levels"]
-        rings = rings_bcast.value
         parts = [
             pc.fill_null(b.column(0), -1).to_numpy(zero_copy_only=False).astype(np.int64)
             for b in batches
@@ -175,7 +147,7 @@ def build_cells_table_map(
             size = 180.0 / np.power(2.0, level.astype(np.float64))
             la[valid] = iy.astype(np.float64) * size - 90.0 + size / 2
             lo[valid] = ix.astype(np.float64) * size - 180.0 + size / 2
-        masks = _resolve_masks(la, lo, keys, tabs, rings, index_levels, n_words)
+        masks = resolve_masks(la, lo, keys, candidates_bcast.value)
         offs, vals = _masks_to_region_lists(masks)
         set_keys = [",".join(map(str, vals[offs[i] : offs[i + 1]])) for i in range(n)]
         # dense rank over lexicographically sorted non-empty set strings —

@@ -325,31 +325,13 @@ def ring_edges(ring: np.ndarray) -> np.ndarray:
     return np.stack([ring[:-1, 0], ring[:-1, 1], ring[1:, 0], ring[1:, 1]], axis=1)
 
 
-def clip_edges_for_cell(edges: np.ndarray, min_lat, max_lat, min_lon) -> np.ndarray:
-    """Edges that can affect the ray-cast parity of ANY point inside the
-    cell [min_lat, max_lat] × [min_lon, …):
-
-    - an edge whose lat range misses the cell's lat band can never straddle
-      a point latitude inside it;
-    - an edge entirely WEST of the cell (both lons < min_lon) is never
-      crossed by the eastward ray.
-
-    This is the query-side counterpart of the definite/candidate split:
-    large admin rings (thousands of edges) shrink to the handful of edges
-    actually near the cell — the dominant PIP cost lever."""
-    ylo = np.minimum(edges[:, 0], edges[:, 2])
-    yhi = np.maximum(edges[:, 0], edges[:, 2])
-    keep = (yhi > min_lat) & (ylo <= max_lat)
-    west = np.maximum(edges[:, 1], edges[:, 3]) < min_lon
-    return edges[keep & ~west]
-
-
 def point_in_edges(lats, lons, edges: np.ndarray, frame: tuple | None = None):
     """Ray-cast parity against an explicit (k,4) edge set (same half-open
     rule as point_in_ring).  Callers are responsible for the edge set being
-    parity-preserving for these points (see clip_edges_for_cell).  Probe
-    lons are shifted into the REGION's continuous frame when the edges came
-    from an antimeridian-wrapped region (identity otherwise).
+    parity-preserving for these points (see the clip in
+    joins/mapjoin.build_cell_candidates).  Probe lons are shifted into the
+    REGION's continuous frame when the edges came from an
+    antimeridian-wrapped region (identity otherwise).
 
     ``frame``: the owning region's (lon_lo, lon_hi) continuous frame.
     Callers holding the region should pass it: re-deriving the frame from a

@@ -7,9 +7,15 @@ GridRegionTree (/root/reference/include/osmtools/OsmGridRegionTree.h:109-151)
 translation of the fact pass is a single ``mapInArrow``:
 
     pages → one text-in Arrow-batched map (RE2 geocode + cell keys +
-    region resolution all inside the batch: definite hits free via
-    searchsorted + mask OR, boundary candidates ray-cast) →
-    (url, cell_key, region_ids)
+    region resolution all inside the batch) → (url, cell_key, region_ids)
+
+Region resolution (``resolve_masks``) reads one flat, object-free table
+(``build_cell_candidates``), in the manner of *Raster Intervals* (SIGMOD
+2023): a per-level ``searchsorted`` probe ORs in the regions that fully
+cover the point's cell, and the regions that only partly cover it are
+decided by a vectorized ray-cast over the batch's (point, region, near
+edge) triples, plus a parity lookup for the edges lying wholly east of the
+cell.  There is no Python loop over cells or regions.
 
 The pass itself moves no rows between tasks.  Its task count comes from
 the input's bytes (``coalesce_by_bytes``), not from the scan's split
@@ -31,130 +37,171 @@ from pyspark.sql import functions as F
 
 from libosmtools_spark.geom import kernels as K
 
+#: a point counts the edges wholly east of its cell by endpoint parity only
+#: when it lies at least this many degrees west of the cell's east bound
+#: (in the region's frame); closer points ray-cast those edges too.  See
+#: build_cell_candidates for why the parity then equals the ray cast.
+_EAST_MARGIN = 1e-10
+#: east edges need |y2 - y1| at least this (or exactly 0), so that the
+#: ray-cast products stay normal floats; shorter edges stay near
+_EAST_MIN_DY = 1e-290
 
-def build_cell_candidates(cell_index_pdf: pd.DataFrame, rings: dict | None = None) -> dict:
-    """Broadcast-ready per-LEVEL lookup tables from the collected
-    cell-coverage index (dimension-scale; the index may hold mixed-level
-    keys — the adaptive default).
 
-    Returns ``{"n_regions": int, "n_words": int, "levels": {level:
-    (keys_sorted int64[k], full_masks int64[k, n_words], part_payload
-    list[k], has_part bool[k])}}``:
+def _cat(parts: list, dtype) -> np.ndarray:
+    return np.concatenate(parts).astype(dtype, copy=False) if parts else np.empty(0, dtype)
 
-    - ``full_masks[i]`` is the OR of the region bits FULLY covering cell
-      ``keys_sorted[i]`` — the kernel resolves full hits with one batched
-      searchsorted + mask-row OR, NO per-cell Python (a per-cell loop over
-      the adaptive index's thousands of fine cells was pure interpreter
-      overhead — measured 2× the whole flagship);
-    - ``part_payload[i]`` lists ``(region_id, clipped_edges|None, lon_lo,
-      lon_hi)`` for boundary (partial) candidates — the only per-cell work
-      left, on a thin point-sparse minority of cells.  (lon_lo, lon_hi) is
-      the owning REGION's continuous longitude frame, threaded through so
-      query-time probe shifting never re-derives a frame from the clipped
-      edge subset (whose max lon can sit exactly at 180.0 for a wrapped
-      region and defeat the identity check).
 
-    When ``rings`` (region_id → (outers, inners)) is given, each partial
-    candidate's boundary is PRE-CLIPPED to the cell (kernels.
-    clip_edges_for_cell): a planet-size ring shrinks to the few edges near
-    the cell, which is where the ray-cast cost goes.  Parity over the
-    combined outer+inner edge set is the even-odd rule — equivalent to
-    inside(outer) ∧ ¬inside(hole) for nested holes (the region model)."""
+def _expand(starts: np.ndarray, counts: np.ndarray):
+    """Ragged CSR expansion: ``(owner, pos)`` listing, for every i,
+    ``pos = starts[i] .. starts[i] + counts[i] - 1`` with ``owner = i``."""
+    owner = np.repeat(np.arange(len(counts)), counts)
+    skip = np.cumsum(counts) - counts
+    pos = np.repeat(starts - skip, counts) + np.arange(len(owner))
+    return owner, pos
+
+
+def build_cell_candidates(cell_index_pdf: pd.DataFrame, rings: dict) -> dict:
+    """Broadcast-ready flat tables (numpy arrays only) from the collected
+    cell-coverage index (mixed-level keys — the adaptive default) and
+    ``rings`` (region_id → continuous-frame (outers, inners)):
+
+    - ``levels[lv] = (keys, full_masks, ent_ptr)``: sorted cell keys, the
+      OR of the bits of the regions FULLY covering each cell, and the CSR
+      of each cell's *entries* (one per region only partly covering it);
+    - per entry: ``ent_rid`` and ``ent_east``, the cell's east bound in
+      the region's frame (the centre shift of the clip); per region:
+      ``frame_mid`` / ``frame_wrap`` as ``kernels.wrap_lons_to_frame`` uses
+      them;
+    - the clipped edges of entry e: slots ``edge_ptr[e]:edge_ptr[e+1]``,
+      NEAR edges first (to ``near_end[e]``), then the edges wholly EAST of
+      the cell; ``edge_id[slot]`` indexes ``edges = (y1, y2, x1, |d|,
+      dxs)``, with ``d = y2 - y1`` and ``dxs = (x2 - x1)·sign(d)`` computed
+      by the floating-point operations of ``kernels._point_in_ring_block``;
+    - the east endpoints: sorted distinct latitudes ``bp_vals`` and sorted
+      keys ``bp_keys = e·(len(bp_vals) + 1) + rank``, entry e's from
+      ``bp_ptr[e]``.
+
+    The clip drops edges whose latitude range misses the cell's band or
+    that lie wholly west of it (the ray runs east).  Parity over outer +
+    inner edges is the even-odd rule (nested holes).
+
+    An edge with ``min(x1, x2) >= E`` crosses the eastward ray from (x, y),
+    x < E, exactly when it straddles y, ``(y1 <= y) != (y2 <= y)``; so its
+    parity is that of ``#(endpoints <= y)``.  This matches the ray-cast
+    formula ``fl(x - x1)·|d| < fl(y - y1)·dxs`` bit for bit once ``E - x >=
+    _EAST_MARGIN``: with t = (y - y1)/(y2 - y1) ∈ [0, 1], the two sides are
+    ``-(x1 - x)·|y2 - y1|·(1 + θ1)`` and ``t·(x2 - x1)·|y2 - y1|·(1 + θ2)``,
+    |θ| <= γ3 = 3u/(1 - 3u), u = 2^-53.  If x2 >= x1 the left side is < 0
+    <= the right side.  If x2 < x1, x1 - x >= t·(x1 - x2) + _EAST_MARGIN,
+    which keeps the left side below the right side while ``_EAST_MARGIN >
+    2.1·γ3·(x1 - x2)`` (2.6e-13 for edges under 360°).  1e-6-grid points
+    sit at least 1e-6/2^10 from every cell bound up to level 12.  Edges with
+    ``0 < |d| < _EAST_MIN_DY`` (products could underflow) stay near.  Pairs
+    within the margin of E — e.g. query lons outside [-180, 180), whose key
+    is normalized but whose ray cast is not — cast all clipped edges."""
     ck = cell_index_pdf["cell_key"].to_numpy(dtype=np.int64)
     rid = cell_index_pdf["region_id"].to_numpy(dtype=np.int64)
     full = cell_index_pdf["full"].to_numpy(dtype=bool)
     n_regions = int(rid.max()) + 1 if len(rid) else 0
     n_words = max(1, (n_regions + 62) // 63)
-    word = rid // 63
-    bit_val = np.int64(1) << (rid % 63).astype(np.int64)
-
-    # (edges, lon_lo, lon_hi) stacked once per REGION, not per cell
-    region_edges: dict[int, tuple] = {}
 
     levels: dict[int, tuple] = {}
+    ent_keys: list = []
+    ent_rids: list = []
+    n_ent = 0
     lv_of = ck >> K._LEVEL_SHIFT
     for lv in np.unique(lv_of):
         m = lv_of == lv
-        keys_lv = ck[m]
-        order = np.argsort(keys_lv, kind="stable")
-        skeys = keys_lv[order]
-        srid = rid[m][order]
-        sfull = full[m][order]
-        sword = word[m][order]
-        sbit = bit_val[m][order]
-        uniq, starts = np.unique(skeys, return_index=True)
-        grp_idx = np.searchsorted(uniq, skeys)  # row → unique-cell index
+        order = np.argsort(ck[m], kind="stable")
+        skeys, srid, sfull = ck[m][order], rid[m][order], full[m][order]
+        uniq, grp_idx = np.unique(skeys, return_inverse=True)  # row → cell row
         full_masks = np.zeros((len(uniq), n_words), dtype=np.int64)
-        frows = np.flatnonzero(sfull)
-        np.bitwise_or.at(full_masks, (grp_idx[frows], sword[frows]), sbit[frows])
-        part_payload: list = [None] * len(uniq)
-        has_part = np.zeros(len(uniq), dtype=bool)
-        prows = np.flatnonzero(~sfull)
-        if len(prows):
-            p_g = grp_idx[prows]  # unique-cell index per partial row
-            p_r = srid[prows]  # owning region per partial row
-            # per-row (clipped_edges, lon_lo, lon_hi), clipped REGION-AT-A-
-            # TIME: the old per-row loop re-ran cell_bounds / frame shift /
-            # a full O(region edges) comparison per boundary cell in Python
-            # — O(boundary cells) interpreter iterations that became the one
-            # driver-side scale cliff of the plan of record.  Here each
-            # region does ONE vectorized bounds+frame pass over all its
-            # cells and a chunked 2-D (cells × edges) clip mask; the only
-            # per-cell step left is the boolean-index edge extraction.
-            clipped: list = [None] * len(prows)
-            if rings is not None:
-                for r in np.unique(p_r):
-                    cached = region_edges.get(int(r))
-                    if cached is None:
-                        outers, inners = rings[int(r)]
-                        arr = np.vstack(
-                            [K.ring_edges(rr) for rr in list(outers) + list(inners)]
-                        )
-                        ylo = np.minimum(arr[:, 0], arr[:, 2])
-                        yhi = np.maximum(arr[:, 0], arr[:, 2])
-                        emax = np.maximum(arr[:, 1], arr[:, 3])
-                        elo = float(min(arr[:, 1].min(), arr[:, 3].min()))
-                        ehi = float(max(arr[:, 1].max(), arr[:, 3].max()))
-                        cached = region_edges[int(r)] = (arr, ylo, yhi, emax, elo, ehi)
-                    arr, ylo, yhi, emax, elo, ehi = cached
-                    rows_r = np.flatnonzero(p_r == r)
-                    min_lat, max_lat, min_lon, max_lon = K.cell_bounds(
-                        uniq[p_g[rows_r]].astype(np.int64)
-                    )
-                    # shift each cell's lon window into the region's
-                    # continuous frame (antimeridian-wrapped regions store
-                    # lons past ±180; identity — shift +0.0 — otherwise)
-                    c = (min_lon + max_lon) / 2.0
-                    cw = np.asarray(K.wrap_lons_to_frame(c, elo, ehi), dtype=np.float64)
-                    sh_min_lon = min_lon + (cw - c)
-                    # chunked (cells × edges) keep mask — same predicate as
-                    # clip_edges_for_cell, evaluated for all cells at once
-                    step = max(1, 4_000_000 // max(len(arr), 1))
-                    for s in range(0, len(rows_r), step):
-                        ch = slice(s, s + step)
-                        keep2d = (
-                            (yhi[None, :] > min_lat[ch, None])
-                            & (ylo[None, :] <= max_lat[ch, None])
-                            & (emax[None, :] >= sh_min_lon[ch, None])
-                        )
-                        for j, row_i in enumerate(rows_r[ch]):
-                            clipped[row_i] = (arr[keep2d[j]], elo, ehi)
-            # assemble per-cell payload lists in the original (key-sorted,
-            # stable) row order — identical ordering to the old loop
-            for i, row in enumerate(prows):
-                g = p_g[i]
-                cl, elo, ehi = clipped[i] if clipped[i] is not None else (None, -180.0, 180.0)
-                if part_payload[g] is None:
-                    part_payload[g] = []
-                part_payload[g].append((int(p_r[i]), cl, elo, ehi))
-                has_part[g] = True
-        levels[int(lv)] = (uniq, full_masks, part_payload, has_part)
-    return {"n_regions": n_regions, "n_words": n_words, "levels": levels}
+        fr = srid[sfull]
+        np.bitwise_or.at(full_masks, (grp_idx[sfull], fr // 63), np.int64(1) << (fr % 63))
+        prows = np.flatnonzero(~sfull)  # key-sorted: a cell's entries are contiguous
+        ent_ptr = np.full(len(uniq) + 1, n_ent, dtype=np.int64)
+        ent_ptr[1:] += np.cumsum(np.bincount(grp_idx[prows], minlength=len(uniq)))
+        levels[int(lv)] = (uniq, full_masks, ent_ptr)
+        ent_keys.append(skeys[prows])
+        ent_rids.append(srid[prows])
+        n_ent += len(prows)
+    ent_key = _cat(ent_keys, np.int64)
+    ent_rid = _cat(ent_rids, np.int64)
 
+    # clip REGION-AT-A-TIME: one vectorized bounds + frame pass over the
+    # region's entries and a chunked 2-D (entries × edges) keep mask whose
+    # np.nonzero IS the CSR content — no per-cell Python
+    ent_east = np.zeros(n_ent, dtype=np.float64)
+    frame_mid = np.zeros(n_regions, dtype=np.float64)
+    frame_wrap = np.zeros(n_regions, dtype=bool)
+    tables: list = []
+    slot_ent: list = []
+    slot_edge: list = []
+    slot_east: list = []
+    n_edges = 0
+    for r in np.unique(ent_rid):
+        outers, inners = rings[int(r)]
+        y1, x1, y2, x2 = np.vstack([K.ring_edges(rr) for rr in list(outers) + list(inners)]).T
+        d = y2 - y1
+        s = np.sign(d)
+        ad = d * s
+        ylo, yhi = np.minimum(y1, y2), np.maximum(y1, y2)
+        xlo, xhi = np.minimum(x1, x2), np.maximum(x1, x2)
+        elo, ehi = float(xlo.min()), float(xhi.max())
+        frame_mid[r] = (elo + ehi) / 2.0
+        frame_wrap[r] = not (elo >= -180.0 and ehi <= 180.0)
+        east_ok = (ad == 0.0) | (ad >= _EAST_MIN_DY)
+        rows = np.flatnonzero(ent_rid == r)
+        min_lat, max_lat, min_lon, max_lon = K.cell_bounds(ent_key[rows])
+        c = (min_lon + max_lon) / 2.0
+        shift = np.asarray(K.wrap_lons_to_frame(c, elo, ehi), dtype=np.float64) - c
+        west = min_lon + shift
+        ent_east[rows] = max_lon + shift
+        step = max(1, 4_000_000 // len(y1))
+        for s0 in range(0, len(rows), step):
+            ch = slice(s0, s0 + step)
+            keep = (
+                (yhi[None, :] > min_lat[ch, None])
+                & (ylo[None, :] <= max_lat[ch, None])
+                & (xhi[None, :] >= west[ch, None])
+            )
+            i, j = np.nonzero(keep)
+            slot_ent.append(rows[ch][i])
+            slot_edge.append(j + n_edges)
+            slot_east.append(east_ok[j] & (xlo[j] >= ent_east[rows[ch][i]]))
+        tables.append((y1, y2, x1, ad, (x2 - x1) * s))
+        n_edges += len(y1)
+    se = _cat(slot_ent, np.int64)
+    sk = _cat(slot_east, bool)
+    order = np.argsort(se * 2 + sk, kind="stable")  # entry-major, near first
+    se, sk, sid = se[order], sk[order], _cat(slot_edge, np.int32)[order]
+    edge_ptr = np.zeros(n_ent + 1, dtype=np.int64)
+    np.cumsum(np.bincount(se, minlength=n_ent), out=edge_ptr[1:])
+    near_end = edge_ptr[:-1] + np.bincount(se[~sk], minlength=n_ent)
+    edges = tuple(_cat([t[k] for t in tables], np.float64) for k in range(5))
 
-#: the single-long bitmask path needs global region ids ≤ MASK_MAX_REGION;
-#: larger stores use the multi-word mask (array<long>)
-MASK_MAX_REGION = 62
+    e_ent, e_id = se[sk], sid[sk]
+    bp_vals, rank = np.unique(
+        np.concatenate([edges[0][e_id], edges[1][e_id]]), return_inverse=True
+    )
+    bp_keys = np.sort(np.tile(e_ent, 2) * (len(bp_vals) + 1) + rank)
+    bp_ptr = 2 * (np.cumsum(edge_ptr[1:] - near_end) - (edge_ptr[1:] - near_end))
+    return {
+        "n_regions": n_regions,
+        "n_words": n_words,
+        "levels": levels,
+        "ent_rid": ent_rid.astype(np.int32),
+        "ent_east": ent_east,
+        "frame_mid": frame_mid,
+        "frame_wrap": frame_wrap,
+        "edge_ptr": edge_ptr,
+        "near_end": near_end,
+        "edge_id": sid,
+        "edges": edges,
+        "bp_vals": bp_vals,
+        "bp_keys": bp_keys,
+        "bp_ptr": bp_ptr,
+    }
 
 
 def _masks_to_region_lists(masks: np.ndarray):
@@ -203,61 +250,83 @@ def _masks_to_region_lists(masks: np.ndarray):
     return offs.astype(np.int32), flat[idx]
 
 
-def _resolve_masks(la, lo, keys, tabs, rings, index_levels, n_words) -> np.ndarray:
-    """The kernel core: (lat, lon, cell_key[-1 sentinel]) arrays → (n,
-    n_words) int64 region bitmasks.  Rows are grouped by cell (np.unique —
-    points in the same cell share one candidate set), definite regions OR
-    in with one batched searchsorted + mask-row OR per level, and only
-    boundary-cell points ray-cast (against edges pre-clipped to the cell).
-    Pure integer/float vector ops — no Python-object strings."""
-    n = len(keys)
-    masks = np.zeros((n, n_words), dtype=np.int64)
-    valid = keys >= 0
-    vidx = np.flatnonzero(valid)
-    la_v = la[vidx]
-    lo_v = lo[vidx]
-    # all probe-level keys from ONE float pass (bit-identical to
-    # per-level cell_key; shifts derive the coarser levels)
-    pkeys_by_level = (
-        K.cell_keys_multi(la_v, lo_v, index_levels)
-        if len(la_v)
-        else {lv: np.empty(0, np.int64) for lv in index_levels}
-    )
-    for lv in index_levels:
-        lkeys, full_masks, part_payload, has_part = tabs[lv]
-        if not len(lkeys):
-            continue
+def resolve_masks(la, lo, keys, cand: dict) -> np.ndarray:
+    """The kernel core: (lat, lon, cell_key[-1 sentinel]) arrays and the
+    ``build_cell_candidates`` tables → (n, n_words) int64 region bitmasks.
+
+    Per level, one searchsorted probe ORs in the full-cover masks and
+    yields the (point, entry) pairs of the partly covering regions.  All
+    pairs of all levels are then decided at once: the near edges (for a
+    pair too close to the cell's east bound, every clipped edge) are
+    ray-cast element-wise over the expanded (pair, edge) triples and
+    counted with ``np.bincount``; the east edges add their
+    endpoint parity (two searchsorted calls); odd totals OR their region
+    bit into the point's mask.  The parity of each pair equals that of a
+    ray cast against all of the entry's clipped edges.  A region's
+    coverage cells partition its area across levels, so each (point,
+    region) pair comes from at most one level."""
+    n_words = cand["n_words"]
+    masks = np.zeros((len(keys), n_words), dtype=np.int64)
+    vidx = np.flatnonzero(keys >= 0)
+    levels = cand["levels"]
+    if not len(vidx) or not levels:
+        return masks
+    # all probe-level keys from ONE float pass (bit-identical to per-level
+    # cell_key; shifts derive the coarser levels)
+    pkeys_by_level = K.cell_keys_multi(la[vidx], lo[vidx], list(levels))
+    pts, ents = [], []
+    for lv, (lkeys, full_masks, ent_ptr) in levels.items():  # every level has keys
         pkeys = pkeys_by_level[lv]
         pos = np.searchsorted(lkeys, pkeys)
         pos[pos >= len(lkeys)] = len(lkeys) - 1
         hit = lkeys[pos] == pkeys
-        hidx = vidx[hit]          # batch row of each matched point
-        hpos = pos[hit]           # index-table row it matched
-        # ---- FULL hits: one vectorized OR per mask word
+        hidx = vidx[hit]  # batch row of each matched point
+        hpos = pos[hit]  # cell row it matched
         for w in range(n_words):
             masks[hidx, w] |= full_masks[hpos, w]
-        # ---- PARTIAL cells: per-cell ray-cast (boundary-only)
-        pm = has_part[hpos]
-        if pm.any():
-            p_idx = hidx[pm]
-            p_pos = hpos[pm]
-            order = np.argsort(p_pos, kind="stable")
-            sp = p_pos[order]
-            si = p_idx[order]
-            uniq, starts = np.unique(sp, return_index=True)
-            ends = np.append(starts[1:], len(sp))
-            for u, s, e in zip(uniq, starts, ends):
-                sel = si[s:e]
-                la_sel = la[sel]  # copy once per cell, not per region
-                lo_sel = lo[sel]
-                for rid, cl, flo, fhi in part_payload[u]:
-                    word, bit = divmod(rid, 63)
-                    if cl is not None:
-                        hits_ = K.point_in_edges(la_sel, lo_sel, cl, frame=(flo, fhi))
-                    else:
-                        outers, inners = rings[rid]
-                        hits_ = K.point_in_rings(la_sel, lo_sel, outers, inners)
-                    masks[sel[hits_], word] |= np.int64(1) << np.int64(bit)
+        owner, ent = _expand(ent_ptr[hpos], ent_ptr[hpos + 1] - ent_ptr[hpos])
+        pts.append(hidx[owner])
+        ents.append(ent)
+    pt = np.concatenate(pts)
+    ent = np.concatenate(ents)
+    if not len(pt):
+        return masks
+    rid = cand["ent_rid"][ent].astype(np.int64)
+    y = la[pt]
+    x = lo[pt]
+    # probe lons into the region's continuous frame (wrap_lons_to_frame's
+    # arithmetic; wrapped regions only — identity elsewhere)
+    wrap = cand["frame_wrap"][rid]
+    if wrap.any():
+        xw = x[wrap]
+        x[wrap] = xw + 360.0 * np.round((cand["frame_mid"][rid[wrap]] - xw) / 360.0)
+    good = x <= cand["ent_east"][ent] - _EAST_MARGIN
+    # east edges: #(endpoints <= y) per entry, via (entry, value-rank) keys
+    q = np.searchsorted(cand["bp_vals"], la, side="right")[pt]
+    at = np.searchsorted(cand["bp_keys"], ent * (len(cand["bp_vals"]) + 1) + q)
+    crossings = np.where(good, at - cand["bp_ptr"][ent], 0)
+    # near edges: one element-wise ray cast over every (pair, edge) triple,
+    # in runs of whole pairs of about K._PIP_CHUNK_ELEMS triples so the
+    # temporaries stay in a core's private cache
+    edge_ptr = cand["edge_ptr"]
+    s_lo = edge_ptr[ent]
+    n_el = np.where(good, cand["near_end"][ent], edge_ptr[ent + 1]) - s_lo
+    cut = np.searchsorted(
+        np.cumsum(n_el), np.arange(K._PIP_CHUNK_ELEMS, n_el.sum(), K._PIP_CHUNK_ELEMS)
+    )
+    ey1, ey2, ex1, ead, edxs = cand["edges"]
+    for a, b in zip(np.r_[0, cut], np.r_[cut, len(pt)]):
+        owner, slot = _expand(s_lo[a:b], n_el[a:b])
+        eid = cand["edge_id"][slot]
+        yy = y[a:b][owner]
+        y1 = ey1[eid]
+        cross = ((y1 <= yy) != (ey2[eid] <= yy)) & (
+            (x[a:b][owner] - ex1[eid]) * ead[eid] < (yy - y1) * edxs[eid]
+        )
+        crossings[a:b] += np.bincount(owner[cross], minlength=b - a)
+    inside = (crossings & 1).astype(bool)
+    r = rid[inside]
+    np.bitwise_or.at(masks, (pt[inside], r // 63), np.int64(1) << (r % 63))
     return masks
 
 
@@ -343,22 +412,21 @@ def map_spatial_join_text(
     Measured at the 25.6M-page scaling tier (local[4]): the JVM
     geocode+key stage alone was ~4.7 s and the identity Arrow round trip
     ~10.6 s; fusing them removes a whole JVM pass and 24 bytes/row of
-    boundary traffic (guide §4.1: control how many columns cross)."""
-    n_regions = candidates_bcast.value["n_regions"]
-    n_words = max(1, (n_regions + 62) // 63)
+    boundary traffic (guide §4.1: control how many columns cross).
+
+    ``rings_bcast`` is not read: the candidate tables carry every edge the
+    kernel casts against, so tasks never deserialize the ring store."""
     id_type = dict(pages.dtypes)[id_col]
     schema = f"{id_col} {id_type}, cell_key long, region_ids array<int>"
-    index_levels = sorted(candidates_bcast.value["levels"].keys())
 
     def run(batches):
         import pyarrow as pa
 
-        tabs = candidates_bcast.value["levels"]
-        rings = rings_bcast.value
+        cand = candidates_bcast.value
         for batch in batches:
             la, lo = _geocode_batch(batch.column(text_col))
             keys = _keys_of(la, lo, level)
-            masks = _resolve_masks(la, lo, keys, tabs, rings, index_levels, n_words)
+            masks = resolve_masks(la, lo, keys, cand)
             offs, vals = _masks_to_region_lists(masks)
             yield pa.RecordBatch.from_arrays(
                 [
@@ -415,13 +483,13 @@ def map_spatial_join(
 ) -> DataFrame:
     """points(id, lat, lon, cell_key) → (id, cell_key, region_ids array).
 
-    Per Arrow batch: group point rows by cell (np.unique — points in the
-    same cell share the same candidate set), assign definite regions
-    without a geometry test, ray-cast the candidates, and OR each hit into
-    a per-point int64 BITMASK (multi-word for stores >62 regions) — pure
+    Per Arrow batch, ``resolve_masks`` assigns definite regions without a
+    geometry test, ray-casts the candidates, and ORs each hit into a
+    per-point int64 BITMASK (multi-word for stores >62 regions) — pure
     integer vector ops, no Python-object strings in the hot path (string
     assembly doubled CPU time at high thread counts from memory stalls).
-    Masks are decoded to sorted region-id arrays JVM-side."""
+    Masks are decoded to Arrow lists of ascending region ids in the batch.
+    ``rings_bcast`` is not read (see map_spatial_join_text)."""
     built = candidates_bcast.value["n_regions"]
     if n_regions is None:
         n_regions = built
@@ -432,7 +500,6 @@ def map_spatial_join(
         raise ValueError(
             f"n_regions={n_regions} does not match the broadcast index build ({built})"
         )
-    n_words = max(1, (n_regions + 62) // 63)
     dtypes = dict(points.dtypes)
     id_type = dtypes[id_col]
     # region_ids emitted DIRECTLY as an Arrow ListArray (offsets + int32
@@ -441,20 +508,12 @@ def map_spatial_join(
     carry_schema = "".join(f", {c} {dtypes[c]}" for c in carry_cols)
     schema = f"{id_col} {id_type}, cell_key long{carry_schema}, region_ids array<int>"
 
-    # The index may hold MIXED-LEVEL keys (the adaptive default): the
-    # kernel probes the point's key at each level present in the index —
-    # a region's coverage cells partition its area across levels, so each
-    # (point, region) pair resolves at most once.  The per-level tables
-    # arrive prebuilt from the driver (build_cell_candidates) so every
-    # worker process consumes them zero-prep.
-    index_levels = sorted(candidates_bcast.value["levels"].keys())
 
     def run(batches):
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        tabs = candidates_bcast.value["levels"]
-        rings = rings_bcast.value
+        cand = candidates_bcast.value
         nan = pa.scalar(float("nan"), type=pa.float64())
         for batch in batches:
             # Arrow-native I/O (mapInArrow): the id column passes through as
@@ -474,7 +533,7 @@ def map_spatial_join(
             # corrupt the whole batch — the asarray int64 check raises
             # loudly if that ever regresses.
             keys = np.asarray(batch.column("cell_key").to_numpy(), dtype=np.int64)
-            masks = _resolve_masks(la, lo, keys, tabs, rings, index_levels, n_words)
+            masks = resolve_masks(la, lo, keys, cand)
             arrays = [batch.column(id_col), batch.column("cell_key")]
             names = [id_col, "cell_key"]
             for c in carry_cols:  # passthrough Arrow buffers (e.g. event time

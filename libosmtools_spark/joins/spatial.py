@@ -74,33 +74,6 @@ def make_pip_udf(rings_bcast):
     return pip
 
 
-def spatial_join_left(
-    points: DataFrame,
-    cell_index: DataFrame,
-    rings_bcast,
-    level: int = 6,
-    lat: str = "lat",
-    lon: str = "lon",
-) -> DataFrame:
-    """Left-outer variant: every point row survives; ``region_id`` is NULL
-    for points in no region.  One broadcast join + the PIP predicate — no
-    union, no second pass — so a downstream groupBy(point key) can build
-    region sets AND carry point attributes in a single shuffle."""
-    pts = points if "cell_key" in points.columns else with_cell_key(points, lat, lon, level)
-    idx = F.broadcast(cell_index)
-    joined = pts.join(idx, "cell_key", "left")
-    pip = make_pip_udf(rings_bcast)
-    # a failed candidate becomes region_id NULL (NOT a dropped row — the
-    # point must survive even if its only candidate fails); downstream
-    # collect_set ignores NULLs
-    matched = F.col("region_id").isNotNull() & (
-        F.col("full") | pip(F.col(lat), F.col(lon), F.col("region_id"))
-    )
-    return joined.withColumn(
-        "region_id", F.when(matched, F.col("region_id"))
-    ).drop("full")
-
-
 def spatial_join(
     points: DataFrame,
     cell_index: DataFrame,

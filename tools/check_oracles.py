@@ -32,7 +32,8 @@ def norm(v):
 def run(sf_dir: str, only: list[str]):
     from libosmtools_spark.session import get_spark
 
-    spark = get_spark(app="oracle-check", cpus=8, shuffle_partitions=8)
+    # get_spark defaults: as many cores as this process may use (default_cpus)
+    spark = get_spark(app="oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")

@@ -7,8 +7,9 @@ measures, store size by store size, what the dispatch point costs:
 - engine build wall (driver-local covering build ≤ LOCAL_INDEX_MAX_REGIONS,
   the distributed applyInPandas build past it);
 - broadcast payload size of the kernel candidate tables (the dense
-  full-mask rows grow as occupied-cells × ceil(regions/63) words — the
-  structural reason broadcast must stop somewhere);
+  full-mask rows grow as occupied-cells × ceil(regions/63) words, the
+  clipped-edge CSR as boundary cells × edges near them — the structural
+  reason broadcast must stop somewhere);
 - flagship query wall on the broadcast-kernel path (flagship_map) vs the
   shuffle-join path (flagship), same 200k-point corpus aimed at the
   store's hotspots.
@@ -71,15 +72,12 @@ def make_pages(spark, n: int):
 
 
 def bcast_payload_bytes(cand: dict) -> int:
-    total = 0
-    for keys, full_masks, part_payload, has_part in cand["levels"].values():
-        total += keys.nbytes + full_masks.nbytes + has_part.nbytes
-        for p in part_payload:
-            if p:
-                for _, cl, _, _ in p:
-                    if cl is not None:
-                        total += cl.nbytes
-    return total
+    """Bytes of the numpy arrays in the kernel candidate tables
+    (joins/mapjoin.build_cell_candidates) — the broadcast payload, pickle
+    framing aside."""
+    arrays = [a for tab in cand["levels"].values() for a in tab] + list(cand["edges"])
+    arrays += [v for v in cand.values() if isinstance(v, np.ndarray)]
+    return sum(a.nbytes for a in arrays)
 
 
 def main() -> None:
